@@ -29,7 +29,7 @@ _TS_FMTS = "['%Y-%m-%dT%H:%M:%S.%fZ', '%Y-%m-%dT%H:%M:%SZ']"
 # (parallel lists) — kept separate so the props5424 builder below can
 # apply last-occurrence-wins dedup per key, the DuckDB twin of the
 # reference's SetProperty map overwrite (model/types.go:497-512) that
-# the four Spark kernels implement.
+# both Spark parse kernels implement.
 _SD_KEYS = (
     f"flatten(list_transform(regexp_extract_all(f_sd, '{_ELEM}', 0), "
     f"e -> list_transform(range(1, len(regexp_extract_all(e, '{_PARAM}', 1)) + 1), "

@@ -1,17 +1,18 @@
 """Arrow-native implementation of the composite syslog parse.
 
-Third, fastest implementation of the exact cascade in
+The production parse kernel: the exact cascade of
 ``syslog.parse_batch`` (reference semantics:
 /root/reference/decoders/rfc3164_format.go:28-194,
 rfc5424_format.go:110-230 — see syslog.py for the citation map).
 Equality against the pandas reference implementation is asserted by
-tests/test_arrowparse.py over the corpus and junk inputs, and the
-DuckDB oracle re-checks the production output end-to-end.
+tests/test_arrowparse.py over the corpus and junk inputs, by the
+hypothesis fuzz in tests/test_parse_properties.py and by every unit
+case in tests/test_parse_units.py; the DuckDB oracle re-checks the
+production output end-to-end.
 
-Why a third implementation: the pandas cascade (syslog.py) pays ~15
+Why a second implementation: the pandas cascade (syslog.py) pays ~15
 full-column passes through object-dtype ``.str`` ops (a hidden Python
-loop each), and the tight-loop variant (fastpath.py) is one Python
-loop per row. Here every regex runs ONCE per batch inside Arrow's
+loop each). Here every regex runs ONCE per batch inside Arrow's
 RE2-backed ``extract_regex`` kernel (C++, no per-row Python), branch
 selection is numpy boolean masks, and Python survives only where the
 data demands it: RFC5424 structured-data parameter explosion (a

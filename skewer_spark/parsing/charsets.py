@@ -28,9 +28,9 @@ import codecs
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from skewer_spark.parsing.syslog import PARSED_SCHEMA, get_parse_kernel
+from skewer_spark.parsing.arrowparse import parse_batch_arrow
+from skewer_spark.parsing.syslog import apply_parse_udf
 
 
 def _onebyte_replace(exc: UnicodeError):
@@ -77,24 +77,6 @@ def transcode_series(raw: pd.Series, charset: str) -> pd.Series:
     return raw.map(_one)
 
 
-def make_parse_bytes_udf(charset: str = "utf8", mode: str = "auto"):
-    """Arrow-batched struct UDF over (raw BINARY, ingest_us BIGINT):
-    transcode inside the batch, then run the selected parse kernel —
-    the batch analog of parserWithEncoding (decode.go:174-185)."""
-    kernel = get_parse_kernel()
-
-    @F.pandas_udf(PARSED_SCHEMA)
-    def parse_bytes(raw: pd.Series, ingest_us: pd.Series) -> pd.DataFrame:
-        text = transcode_series(raw, charset)
-        if mode == "auto":
-            return kernel(text, ingest_us)
-        from skewer_spark.parsing.arrowparse import parse_batch_arrow
-
-        return parse_batch_arrow(text, ingest_us, mode=mode)
-
-    return parse_bytes.asNondeterministic()  # same rationale as make_parse_udf
-
-
 def parse_transcripts_bytes(
     df: DataFrame,
     bytes_col: str = "raw",
@@ -103,9 +85,10 @@ def parse_transcripts_bytes(
     mode: str = "auto",
 ) -> DataFrame:
     """transcripts with a BINARY payload column -> parsed columns,
-    transcoding from the named charset first."""
-    udf = make_parse_bytes_udf(charset, mode)
-    parsed = df.withColumn(
-        "_p", udf(F.col(bytes_col), F.unix_micros(F.col(ts_col).cast("timestamp")))
-    )
-    return parsed.select("*", "_p.*").drop("_p")
+    transcoding from the named charset inside the batch first — the
+    batch analog of parserWithEncoding (decode.go:174-185)."""
+
+    def parse_bytes(raw: pd.Series, ingest_us: pd.Series) -> pd.DataFrame:
+        return parse_batch_arrow(transcode_series(raw, charset), ingest_us, mode=mode)
+
+    return apply_parse_udf(df, parse_bytes, bytes_col, ts_col=ts_col)

@@ -24,10 +24,9 @@ from collections.abc import Callable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from skewer_spark.parsing.arrowparse import parse_batch_arrow
-from skewer_spark.parsing.syslog import PARSED_SCHEMA
+from skewer_spark.parsing.syslog import apply_parse_udf
 
 ParseKernel = Callable[[pd.Series, pd.Series], pd.DataFrame]
 
@@ -492,16 +491,4 @@ def parse_with_formats(
             pieces.append(part)
         return pd.concat(pieces).sort_index().reset_index(drop=True)
 
-    # nondeterministic flag: stops Catalyst duplicating the UDF below a
-    # pushed-down filter (same rationale as make_parse_udf)
-    dispatch = F.pandas_udf(PARSED_SCHEMA)(_dispatch).asNondeterministic()
-
-    parsed = df.withColumn(
-        "_p",
-        dispatch(
-            F.col(format_col),
-            F.col(text_col),
-            F.unix_micros(F.col(ts_col).cast("timestamp")),
-        ).alias("_p"),
-    )
-    return parsed.select("*", "_p.*").drop("_p")
+    return apply_parse_udf(df, _dispatch, format_col, text_col, ts_col=ts_col)

@@ -13,6 +13,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import drain
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -224,7 +226,7 @@ def test_bloom_dedup_stream_bounded_state_invariants(spark, tmp_path):
     out = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
     q = bloom_dedup_stream(stream, spark, str(out), str(ckpt))
-    q.awaitTermination(120)
+    drain(q, 120)
 
     uniq = spark.read.parquet(str(out / "unique")).collect()
     sus = spark.read.parquet(str(out / "suspect")).collect()
@@ -404,7 +406,7 @@ def test_cms_stream_accumulates_exactly_and_estimates_upper_bound(
     )
     ckpt = tmp_path / "ckpt"
     q = cms_stream(stream, spark, str(ckpt), "term")
-    q.awaitTermination(120)
+    drain(q, 120)
 
     streamed = np.load(str(ckpt / "cms_state.npy"))
     assert (streamed == full_grid).all()
@@ -443,7 +445,7 @@ def test_bloom_stream_preserves_underscore_user_columns(spark, tmp_path):
     )
     out, ckpt = tmp_path / "out", tmp_path / "ckpt"
     q = bloom_dedup_stream(stream, spark, str(out), str(ckpt))
-    q.awaitTermination(120)
+    drain(q, 120)
     uniq = spark.read.parquet(str(out / "unique"))
     assert set(uniq.columns) == {"doc_id", "text", "_priority"}
     pri = {r["doc_id"]: r["_priority"] for r in uniq.collect()}

@@ -529,7 +529,7 @@ def test_json_kernel_matches_column_decoder(spark, sf_dir):
     # the dispatchable pJSON kernel (registry 'json') and the
     # Column-based encoders.decode_json must produce IDENTICAL internal
     # fields on the whole encoded corpus — same dual-implementation
-    # parity contract as the four syslog kernels
+    # parity contract as the two syslog kernels
     from skewer_spark import enrich as enr
     from skewer_spark.encoders import decode_json, encode_json
     from skewer_spark.parsing.registry import parse_json_batch
